@@ -1,46 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.core.Tables
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
-  * Queries are materialized with the `noop` sink — a bare count() would
-  * let Catalyst prune away computed columns (fingerprints, scores) and
-  * time only the scan.
+  * Queries are materialized with the `noop` sink ([[Harness.noopSeconds]]).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 300+-query suite generates thousands of
-      // codegen units per pass, so by the time pass 2 of a query runs its
-      // compiled classes are long evicted and EVERY query re-pays Janino
-      // compilation in every pass. Scale-independent (any long-lived app
-      // running many distinct operators wants this); it caches compiled
-      // code, never results — every pass still computes from parquet.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT + codegen + parquet-footer caches, so the first
-    // measured query isn't charged for JVM startup
-    try {
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      Tables.lineitem(spark, sfDir).limit(1000).write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => }
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9 }
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      try Harness.noopSeconds(fn(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
-    }
     // N timed passes (default 2), min per query: a single mid-suite sample
     // is exposed to GC pauses / context-cleaner bursts from earlier queries
     // (round-3 q33/q34 showed 5-7x one-off spikes with unchanged code).
@@ -60,16 +36,9 @@ object Bench {
       val ok = passes.map(_(name)).filter(_ >= 0)
       name -> (if (ok.isEmpty) -1.0 else ok.min)
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // echo the EFFECTIVE parallelism (r12 verdict item 2: the scaling
-    // contract must be checkable from the artifact — `cpus` alone can't
-    // distinguish "env var ignored" from "overhead-bound at this SF")
-    val par = spark.sparkContext.defaultParallelism
-    val master = spark.sparkContext.master
-    val envJson = f""""cpus":$cpus,"parallelism":$par,"master":"$master""""
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson,"queries":$qs,"sf":"$sfDir","runs":$runs,"agg":"min"}"""
+    val envJson = Harness.envJson(spark)
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson,"queries":${Harness.timesJson(results)},"sf":"$sfDir","runs":$runs,"agg":"min"}"""
     println(json)
     // side-channel: sbt prefixes stdout with [info], which can defeat a
     // strict line parser — the same JSON is always available as a file

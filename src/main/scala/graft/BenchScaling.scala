@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent audit: times the most expensive gates at successive
   * scale decades and reports the measured exponent
   * `ln(t_hi/t_lo) / ln(rows_hi/rows_lo)` against each query's DOCUMENTED
@@ -173,17 +171,9 @@ object BenchScaling {
 
   def main(args: Array[String]): Unit = {
     val sf1Dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
-
+    val spark = Harness.session()
     val dirs = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1", sf1Dir)
+    Harness.warmup(spark, dirs.head)
     val haveSf1 = new java.io.File(s"$sf1Dir/lineitem.parquet").exists() &&
       new java.io.File(s"$sf1Dir/embeddings.parquet").exists()
 
@@ -192,11 +182,7 @@ object BenchScaling {
 
     def timeOne(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = Harness.noopSeconds(fn(spark, dir))
       if (SinglePass(name) && dir == sf1Dir) once()
       else math.min(once(), once())
     }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.api.GraftEngine
+import graft.core.GraftConfig
 
 /** Command-line entry point mirroring the reference CLI's verbs
   * (claude-indexer index / search / read-graph / get-implementation /
@@ -25,21 +25,8 @@ import graft.api.GraftEngine
 object Cli {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) { System.err.println("usage: see Cli scaladoc"); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a long-lived engine session runs many
-      // distinct operators (index + search verbs + maintenance), whose
-      // generated classes thrash a 100-entry compiled-class cache; size it
-      // to the operator count (same sizing as the harness mains). Caches
-      // compiled CODE only, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the CLI at a cluster deployment
+    val spark = Harness.session(sys.env.getOrElse("SPARK_MASTER", Harness.master))
 
     def engine(store: String) = GraftEngine(spark, store)
     def requireArgs(n: Int, usage: String): Unit =
@@ -99,8 +86,8 @@ object Cli {
         requireArgs(3, "watch <projectDir> <storeDir> [debounceMs]")
         import spark.implicits._
         val (project, store) = (args(1), args(2))
-        val debounce = if (args.length > 3) args(3).toLong
-        else graft.streaming.WatchPipeline.DefaultDebounceMs
+        val config = if (args.length > 3) GraftConfig(debounceSeconds = args(3).toLong / 1000.0)
+        else GraftConfig()
         val events = spark.readStream
           .format("graft.streaming.FileWatchSource")
           .option("path", project)
@@ -108,8 +95,8 @@ object Cli {
           .as[graft.streaming.WatchPipeline.FileEvent]
         val ckpt = java.nio.file.Files.createTempDirectory("graft_watch_ckpt").toString
         val q = graft.streaming.WatchPipeline.initialIndexThenWatch(
-          spark, project, events, store, ckpt, debounceMs = debounce)
-        println(s"watching $project -> $store (debounce ${debounce}ms); Ctrl-C to stop")
+          spark, project, events, store, ckpt, config = config)
+        println(s"watching $project -> $store (debounce ${config.debounceSeconds}s); Ctrl-C to stop")
         q.awaitTermination()
       case other =>
         System.err.println(s"unknown command: $other"); sys.exit(2)

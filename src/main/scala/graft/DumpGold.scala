@@ -1,15 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch runner: prints a gate's rows as DuckDB VALUES literals for
   * golden-oracle transcription (q207-q209 / q216-q219 pattern).
   */
 object DumpGold {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     args.foreach { q =>
       val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
       println(s"== $q  schema: ${df.schema.simpleString}")

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{conv, md5, sha2, substring}
 
 /** Deterministic hashing/IDs (reference: storage/qdrant.py:1423-1430 —
   * `int(sha256(chunk_id)[:16], 16)`; we take 15 hex digits = 60 bits so the
@@ -52,12 +54,22 @@ object Ids {
   def pointId(chunkId: String): Long =
     top60(sha256Local.get().digest(chunkId.getBytes(StandardCharsets.UTF_8)))
 
+  /** Column twin of [[pointId]]. */
+  def pointIdCol(chunkId: Column): Column =
+    conv(substring(sha2(chunkId, 256), 1, 15), 16, 10).cast("bigint")
+
   /** 31-bit hash used by the deterministic embedder and dedup family —
     * must stay formula-identical to the SQL side
     * (`conv(substring(md5(s),1,15),16,10) % 2147483647`).
     */
   def hash31(s: String): Long =
     top60(md5Local.get().digest(s.getBytes(StandardCharsets.UTF_8))) % 2147483647L
+
+  /** Column form of the md5 top-60 prefix, the engine's portable gram and
+    * bucket hash; `md5Top60Col(c) % 2147483647` is the twin of [[hash31]].
+    */
+  def md5Top60Col(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Chunk-id grammar (reference: analysis/entities.py:81-143,247-262 —
     * minus the `id(relation)` salt, which would break determinism).

@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Ids
+import graft.search.Bm25
 
 /** Cross-document duplicated-span coverage — the exact-substring dedup
   * signal (Lee et al. 2022, "Deduplicating Training Data Makes Language
@@ -24,21 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object DupSpans {
 
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 1)
-
-  /** 60-bit portable hash of a gram string (same md5-prefix derivation as
-    * [[graft.functions.Splits.hashBucket]] so the oracle replays it).
-    */
-  private def gramHash(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Per-doc duplicated-span profile: token count, n-gram count, how many
     * gram instances are cross-doc duplicates, how many token positions
     * those duplicates cover, and the covered fraction.
     */
   def coverage(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("t"))
+    val base = docs.select(col(idCol).as("doc_id"), Bm25.tokens(col(textCol)).as("t"))
       .withColumn("n_toks", size(col("t")))
 
     // (doc, 1-based position, gram-hash) — one row per n-gram window.
@@ -49,7 +42,7 @@ object DupSpans {
         posexplode(when(col("n_toks") < n, array().cast("array<long>"))
           .otherwise(transform(
             sequence(lit(1), col("n_toks") - (n - 1)),
-            i => gramHash(array_join(slice(col("t"), i, lit(n)), " "))))))
+            i => Ids.md5Top60Col(array_join(slice(col("t"), i, lit(n)), " "))))))
       .select(col("doc_id"), col("n_toks"), (col("pos") + 1).as("i"), col("col").as("g"))
 
     // The gram pipeline (tokenize + md5 per window) feeds the dup-set agg

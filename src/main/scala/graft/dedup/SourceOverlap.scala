@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Ids
+import graft.search.Bm25
 
 /** Directed source-level n-gram containment matrix — "which sources copy
   * from which": containment(a→b) = |sig(a) ∩ sig(b)| / |sig(a)|, where
@@ -26,22 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object SourceOverlap {
 
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 1)
-
-  private def gramHash(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Top-`limit` directed containment pairs (a ≠ b), strongest first. */
   def containment(docs: DataFrame, srcCol: String, textCol: String,
                   n: Int, maxSources: Int, limit: Int): DataFrame = {
-    val base = docs.select(col(srcCol).as("src"), tokens(col(textCol)).as("t"))
+    val base = docs.select(col(srcCol).as("src"), Bm25.tokens(col(textCol)).as("t"))
       .filter(size(col("t")) >= n)
     val grams = base
       .select(col("src"), explode(expr(
         s"transform(sequence(1, size(t) - ${n - 1}), i -> array_join(slice(t, i, $n), ' '))"))
         .as("g"))
-      .select(col("src"), gramHash(col("g")).as("g"))
+      .select(col("src"), Ids.md5Top60Col(col("g")).as("g"))
       .distinct()
 
     // tokenize + md5 per window feeds four consumers (band, totals, both

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Ids
 
 /** AMS / tug-of-war sketch of the second frequency moment F₂ = Σ f_x²
   * (Alon, Matias & Szegedy 1996) — the self-join-size / skew estimate
@@ -32,8 +33,7 @@ object AmsSketch {
       .select(col("token"), col("f"),
         explode(sequence(lit(0), lit(k - 1))).as("k"))
       .withColumn("s", lit(1L) - lit(2L)
-        * (conv(substring(md5(concat(col("token"), lit("|"),
-            col("k").cast("string"))), 1, 15), 16, 10).cast("long") % 2))
+        * (Ids.md5Top60Col(concat(col("token"), lit("|"), col("k").cast("string"))) % 2))
     fanned.groupBy(col("k")).agg(sum(col("f") * col("s")).as("y"))
       .crossJoin(broadcast(exact))
       .select(col("k").cast("long").as("k"), col("y"),

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.search.Bm25
 
 /** Tiered term-blocklist admission — the C4/CCNet-style "badwords" gate of
   * a web-corpus pipeline, with severity tiers instead of a single list:
@@ -20,9 +21,6 @@ import org.apache.spark.sql.functions._
   * the exploded token stream, same shape as the q45 decontamination gate.
   */
 object Blocklist {
-
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 1)
 
   private def hits(toks: Column, terms: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(terms)))
@@ -47,7 +45,7 @@ object Blocklist {
   def tag(docs: DataFrame, textCol: String,
           severe: Seq[String], mild: Seq[String], mildMax: Int): DataFrame = {
     val (sev, mld) = (normalize(severe, "severe"), normalize(mild, "mild"))
-    val toks = tokens(col(textCol))
+    val toks = Bm25.tokens(col(textCol))
     docs
       .withColumn("severe_hits", hits(toks, sev).cast("long"))
       .withColumn("mild_hits", hits(toks, mld).cast("long"))

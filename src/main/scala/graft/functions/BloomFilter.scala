@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Ids
 
 /** PORTABLE BLOOM FILTER (Bloom 1970, m = 1024 bits × k = 4 hashes) —
   * the runtime-filter structure that lets a 100 TB probe side skip rows
@@ -26,8 +27,7 @@ object BloomFilter {
     * twin of `Ids.hash31(s"$i|$v") % M` (same md5-top60 formula).
     */
   def position(i: Int, v: Column): Column =
-    (conv(substring(md5(concat(lit(s"$i|"), v)), 1, 15), 16, 10)
-      .cast("long") % 2147483647L) % M
+    (Ids.md5Top60Col(concat(lit(s"$i|"), v)) % 2147483647L) % M
 
   /** The set-bit table `(pos)` — distinct positions only, ≤ m rows no
     * matter the build-side cardinality (partial-agg distinct; merge of

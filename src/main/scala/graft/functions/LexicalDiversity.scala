@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.search.Bm25
 
 /** Lexical-diversity profiling — type-token ratio, hapax-legomena share
   * and top-token concentration, the quality signals that catch generated
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object LexicalDiversity {
 
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 1)
-
   /** Per-doc diversity metrics:
     * ttr = distinct types / tokens; hapax_ratio = once-only types / types;
     * top_share = most frequent token's share of the doc.
@@ -32,7 +30,7 @@ object LexicalDiversity {
              carry: Seq[String] = Nil): DataFrame = {
     val keys = col(idCol).as("doc_id") +: carry.map(col)
     val tokCounts = docs
-      .select(keys :+ explode(tokens(col(textCol))).as("w"): _*)
+      .select(keys :+ explode(Bm25.tokens(col(textCol))).as("w"): _*)
       .groupBy(col("doc_id") +: carry.map(col) :+ col("w"): _*)
       .agg(count(lit(1)).as("c"))
     tokCounts

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.core.Ids
 
 /** Deterministic dataset splitting for training pipelines: hash-based
   * train/val/test assignment and per-stratum sampling. The bucket hash is
@@ -21,8 +22,7 @@ object Splits {
     * so independent splits of the same key-space don't correlate) mod m.
     */
   def hashBucket(c: Column, m: Int, salt: String = ""): Column =
-    (conv(substring(md5(concat(c.cast("string"), lit(salt))), 1, 15), 16, 10)
-      .cast("long") % m)
+    Ids.md5Top60Col(concat(c.cast("string"), lit(salt))) % m
 
   /** 'train' / 'val' / 'test' label with the given percentage cut points
     * (trainPct + valPct ≤ 100; the rest is test).

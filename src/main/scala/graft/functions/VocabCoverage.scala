@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.search.Bm25
 
 /** Tokenizer-vocabulary coverage audit: fit a frequency-thresholded vocab
   * on the TRAIN hash-split, then measure out-of-vocabulary rates on every
@@ -24,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object VocabCoverage {
 
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 1)
-
   /** Per-split coverage vs the train-fitted vocab: token instances,
     * distinct types, token-level and type-level OOV rates, vocab size.
     */
@@ -35,7 +33,7 @@ object VocabCoverage {
     val toks = docs.select(
       when(Splits.hashBucket(col(keyCol), 100) < trainPct, "train")
         .otherwise("val").as("split"),
-      explode(tokens(col(textCol))).as("w"))
+      explode(Bm25.tokens(col(textCol))).as("w"))
     // the tokenize+count pipeline feeds three consumers (vocab filter,
     // membership tag, rollup) — checkpoint so the corpus scans once
     val counts = toks.groupBy(col("split"), col("w")).agg(count(lit(1)).as("c"))

@@ -297,9 +297,9 @@ object IndexPipeline {
       .withColumn("dense", col("dense_ex")).drop("dense_ex")
 
     val embedded = embedder.embed(toEmbed, "content")
-      .withColumn("pointId", expr("cast(conv(substring(sha2(chunkId, 256), 1, 15), 16, 10) as bigint)"))
+      .withColumn("pointId", Ids.pointIdCol(col("chunkId")))
     val reused = reusable
-      .withColumn("pointId", expr("cast(conv(substring(sha2(chunkId, 256), 1, 15), 16, 10) as bigint)"))
+      .withColumn("pointId", Ids.pointIdCol(col("chunkId")))
 
     // persist: the embed DAG must run ONCE — the stat counts and the store
     // write would otherwise each re-embed every new chunk (4x the work; with

@@ -24,30 +24,49 @@ object IndexStore {
   def chunksPath(root: String) = s"$root/chunks"
   def statePath(root: String) = s"$root/file_state"
 
-  /** Crash recovery for the two-rename swap: if a crash landed between
-    * `move(path -> old)` and `move(tmp -> path)`, the data lives in
-    * `<path>_old` — restore it instead of silently treating the store as
-    * absent (which would full-reindex and lose manual memories).
+  // Staging names stay as earlier builds wrote them, so their leftovers
+  // still heal. Partition staging (`chunks_ptmp_<pt>`, `chunks_pold_<pt>`)
+  // lives OUTSIDE the table: a `chunkType=metadata_tmp` sibling would
+  // register as a phantom partition value during discovery.
+  private def tmpOf(path: String): Path = Paths.get(path + "_tmp")
+  private def oldOf(path: String): Path = Paths.get(path + "_old")
+  private val PartOld = "_pold_"
+
+  /** The one copy-on-write swap: write `tmp`, move `target` aside to
+    * `old`, move `tmp` in, drop `old`.
     */
+  private def swap(target: Path, tmp: Path, old: Path)(write: String => Unit): Unit = {
+    deleteRecursive(tmp)
+    write(tmp.toString)
+    deleteRecursive(old)
+    if (Files.exists(target)) Files.move(target, old)
+    Files.createDirectories(target.toAbsolutePath.getParent)
+    Files.move(tmp, target)
+    deleteRecursive(old)
+  }
+
+  /** One rule for every [[swap]] leftover: a crash between its two moves
+    * leaves `old` with `target` missing, so restore it (rather than read
+    * the store as absent, full-reindex and lose manual memories);
+    * otherwise `target` is the newer data and `old` goes.
+    */
+  private def heal(target: Path, old: Path): Unit =
+    if (Files.exists(old)) {
+      if (Files.exists(target)) deleteRecursive(old)
+      else { Files.createDirectories(target.toAbsolutePath.getParent); Files.move(old, target) }
+    }
+
+  /** Heal the table swap of `path`, then each of its partition swaps. */
   private def recover(path: String): Unit = {
-    val p = Paths.get(path); val old = Paths.get(path + "_old")
-    if (!Files.exists(p) && Files.exists(old)) Files.move(old, p)
-    // partition-level swap leftovers ([[replaceTypePartition]]):
-    // <path>_pold_<pt> holds the previous chunkType=<pt> partition when a
-    // crash hit the window between its two moves — restore it unless the
-    // new partition landed.
-    val parent = p.getParent
-    if (parent != null && Files.exists(parent)) {
-      val prefix = p.getFileName.toString + "_pold_"
+    val p = Paths.get(path).toAbsolutePath
+    heal(p, oldOf(path))
+    if (Files.exists(p.getParent)) {
+      val prefix = p.getFileName.toString + PartOld
       import scala.jdk.CollectionConverters._
-      val l = Files.list(parent)
+      val l = Files.list(p.getParent)
       try l.iterator().asScala.toVector
-        .filter(_.getFileName.toString.startsWith(prefix)).foreach { o =>
-          val pt = o.getFileName.toString.stripPrefix(prefix)
-          val part = p.resolve(s"chunkType=$pt")
-          if (!Files.exists(part)) { Files.createDirectories(p); Files.move(o, part) }
-          else deleteRecursive(o)
-        }
+        .filter(_.getFileName.toString.startsWith(prefix))
+        .foreach(o => heal(p.resolve("chunkType=" + o.getFileName.toString.stripPrefix(prefix)), o))
       finally l.close()
     }
   }
@@ -74,18 +93,13 @@ object IndexStore {
         .forEach(f => Files.delete(f))
     }
 
-  /** Copy-on-write overwrite: write to `<path>_tmp`, swap, drop old. */
+  /** Copy-on-write overwrite of a whole table ([[swap]]). */
   def overwrite(df: DataFrame, path: String, partitionCols: Seq[String] = Seq.empty): Unit = {
     recover(path) // heal a half-finished previous swap before reading lineage
-    val tmp = path + "_tmp"
-    val old = path + "_old"
-    deleteRecursive(Paths.get(tmp))
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
-    deleteRecursive(Paths.get(old))
-    if (Files.exists(Paths.get(path))) Files.move(Paths.get(path), Paths.get(old))
-    Files.move(Paths.get(tmp), Paths.get(path))
-    deleteRecursive(Paths.get(old))
+    swap(Paths.get(path), tmpOf(path), oldOf(path)) { tmp =>
+      val w = df.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
+    }
   }
 
   def writeChunks(df: DataFrame, root: String): Unit = {
@@ -98,24 +112,16 @@ object IndexStore {
     * NOT carry the chunkType column (partition values are directory-
     * encoded). A single-partition upsert (addManualMemory's one metadata
     * chunk) rewrites that partition's bytes instead of the whole store,
-    * and the read side prunes to the same partition. Staging dirs live
-    * OUTSIDE the table directory: a `chunkType=metadata_tmp` sibling
-    * would register as a phantom partition value during discovery. Crash
-    * recovery mirrors the table-level swap ([[recover]] heals
-    * `chunks_pold_<pt>` leftovers).
+    * and the read side prunes to the same partition. Same [[swap]] and
+    * crash recovery as a table write.
     */
   def replaceTypePartition(df: DataFrame, root: String, pt: String): Unit = {
-    recover(chunksPath(root))
-    val part = Paths.get(chunksPath(root), s"chunkType=$pt")
-    val tmp = Paths.get(chunksPath(root) + s"_ptmp_$pt")
-    val old = Paths.get(chunksPath(root) + s"_pold_$pt")
-    deleteRecursive(tmp)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    deleteRecursive(old)
-    if (Files.exists(part)) Files.move(part, old)
-    Files.createDirectories(part.getParent)
-    Files.move(tmp, part)
-    deleteRecursive(old)
+    val chunks = chunksPath(root)
+    recover(chunks)
+    swap(Paths.get(chunks, s"chunkType=$pt"), Paths.get(chunks + s"_ptmp_$pt"),
+        Paths.get(chunks + PartOld + pt)) { tmp =>
+      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    }
   }
 
   def writeState(df: DataFrame, root: String): Unit = {
@@ -166,8 +172,7 @@ object IndexStore {
     * parse nothing.
     */
   def clearState(root: String): Unit = {
-    deleteRecursive(Paths.get(statePath(root)))
-    deleteRecursive(Paths.get(statePath(root) + "_old"))
-    deleteRecursive(Paths.get(statePath(root) + "_tmp"))
+    val state = statePath(root)
+    Seq(Paths.get(state), oldOf(state), tmpOf(state)).foreach(deleteRecursive)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Ids
 
 /** Deterministic bootstrap confidence intervals — the resampling answer
   * to "how stable is this per-group mean", without an RNG. Each of `b`
@@ -33,12 +34,8 @@ object Bootstrap {
     require(b <= 30, "two 60-bit digests carry at most 30 replica bit-pairs")
     val reps = df
       .select(col(groupCol), col(idCol), col(valueCol))
-      .withColumn("h0",
-        conv(substring(md5(concat(col(idCol).cast("string"), lit(":0"))), 1, 15), 16, 10)
-          .cast("long"))
-      .withColumn("h1",
-        conv(substring(md5(concat(col(idCol).cast("string"), lit(":1"))), 1, 15), 16, 10)
-          .cast("long"))
+      .withColumn("h0", Ids.md5Top60Col(concat(col(idCol).cast("string"), lit(":0"))))
+      .withColumn("h1", Ids.md5Top60Col(concat(col(idCol).cast("string"), lit(":1"))))
       .withColumn("b", explode(sequence(lit(0), lit(b - 1))))
       .withColumn("h", when(col("b") < 15, col("h0")).otherwise(col("h1")))
       .withColumn("sh", (col("b") % 15) * 2)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Ids, Tables}
 import graft.functions.{Quantiles, Splits, UrlOps}
 
 /** Corpus-preparation operators over the documents table: URL
@@ -713,8 +713,7 @@ object CorpusQueries {
       // 31-bit per-doc hash: a 60-bit sum would overflow Long mid-agg
       // (silent wrap in Spark, HUGEINT in DuckDB — a cross-engine
       // divergence); 31-bit sums stay exact to ~4e9 docs per shard
-      val h = (conv(substring(md5(col("text")), 1, 15), 16, 10)
-        .cast("long") % 2147483647L)
+      val h = Ids.md5Top60Col(col("text")) % 2147483647L
       Tables.documents(s, dir)
         .withColumn("shard", Splits.hashBucket(col("doc_id"), 16, ":shard"))
         .withColumn("h", h)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.GraftConfig
 import graft.core.Model.{FileState, ParserResult}
 import graft.index.{DeterministicEmbedder, Embedder, IndexPipeline, IndexStore}
 import graft.ingest.ParserRegistry
@@ -22,8 +23,6 @@ import graft.ingest.ParserRegistry
   * events).
   */
 object WatchPipeline {
-
-  val DefaultDebounceMs = 2000L // reference debounce=2.0s (config/models.py:99)
 
   case class FileEvent(relPath: String, eventType: String, ts: Long, content: String)
 
@@ -47,7 +46,7 @@ object WatchPipeline {
     * `_should_process_file`). Deletes are always in scope: a file that
     * LEFT the surface (e.g. config change) must still cascade out.
     */
-  private[streaming] def inScanSurface(e: FileEvent, config: graft.core.GraftConfig): Boolean =
+  private[streaming] def inScanSurface(e: FileEvent, config: GraftConfig): Boolean =
     e.eventType == "deleted" || (
       graft.ingest.SourceScan.included(e.relPath, config.includes) &&
       !graft.ingest.SourceScan.excluded(e.relPath, config.excludes) &&
@@ -62,7 +61,7 @@ object WatchPipeline {
     */
   def processBatch(spark: SparkSession, batch: Dataset[FileEvent], storeDir: String,
                    embedder: Embedder = DeterministicEmbedder(),
-                   config: graft.core.GraftConfig = graft.core.GraftConfig()): IndexPipeline.IndexingResult = {
+                   config: GraftConfig = GraftConfig()): IndexPipeline.IndexingResult = {
     import spark.implicits._
     val latest = coalesce(batch.toDF()).as[FileEvent]
       .filter(e => inScanSurface(e, config)).cache()
@@ -98,39 +97,25 @@ object WatchPipeline {
     * diff picks exactly those up.
     */
   def initialIndexThenWatch(spark: SparkSession, projectDir: String,
-                            events: org.apache.spark.sql.Dataset[FileEvent],
-                            storeDir: String,
-                            checkpointDir: String,
-                            embedder: Embedder = DeterministicEmbedder(),
-                            debounceMs: Long = DefaultDebounceMs): StreamingQuery = {
-    IndexPipeline.index(spark, projectDir, storeDir, embedder)
-    start(events, storeDir, embedder, debounceMs, checkpointDir)
-  }
-
-  /** Config-driven variant: debounce (micro-batch quiet period) and the
-    * scan surface both come from [[graft.core.GraftConfig]].
-    */
-  def initialIndexThenWatch(spark: SparkSession, projectDir: String,
-                            events: org.apache.spark.sql.Dataset[FileEvent],
+                            events: Dataset[FileEvent],
                             storeDir: String, checkpointDir: String,
-                            embedder: Embedder,
-                            config: graft.core.GraftConfig): StreamingQuery = {
+                            embedder: Embedder = DeterministicEmbedder(),
+                            config: GraftConfig = GraftConfig()): StreamingQuery = {
     IndexPipeline.index(spark, projectDir, storeDir, embedder, config)
-    start(events, storeDir, embedder, (config.debounceSeconds * 1000).toLong, checkpointDir, config)
+    start(events, storeDir, embedder, checkpointDir, config)
   }
 
   /** Wire a streaming Dataset[FileEvent] into the store. The trigger
-    * interval IS the debounce quiet period.
+    * interval IS the debounce quiet period (`config.debounceSeconds`).
     */
   def start(events: Dataset[FileEvent], storeDir: String,
             embedder: Embedder = DeterministicEmbedder(),
-            debounceMs: Long = DefaultDebounceMs,
             checkpointDir: String,
-            config: graft.core.GraftConfig = graft.core.GraftConfig()): StreamingQuery =
+            config: GraftConfig = GraftConfig()): StreamingQuery =
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(debounceMs))
+      .trigger(Trigger.ProcessingTime((config.debounceSeconds * 1000).toLong))
       .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
         processBatch(batch.sparkSession, batch, storeDir, embedder, config): Unit
       }

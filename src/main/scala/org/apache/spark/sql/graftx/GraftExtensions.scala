@@ -8,12 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions as SQL functions, so plain `spark.sql` can call
   * `cosine_similarity(vec, other)` and `sorted_intersect_size(a, b)`.
   *
-  * Enable with:
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "org.apache.spark.sql.graftx.GraftExtensions")
-  * }}}
-  * or `.withExtensions(new GraftExtensions)` on an existing builder.
+  * Enable with the conf `spark.sql.extensions` =
+  * `org.apache.spark.sql.graftx.GraftExtensions`, or with
+  * `.withExtensions(new GraftExtensions)` on a session builder (as
+  * [[graft.Harness.session]] does).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,16 +1,18 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.scalacheck.Gen
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Ids
 import graft.index.EmbedBatching
 
 /** Property-based invariants over the pure (driver-side) primitives —
   * the hash/id layer every join keys on (SURVEY.md §7.2 step 1).
   * Plain ScalaCheck Gen sampling (no scalatestplus bridge in the offline
-  * dependency set).
+  * dependency set). Where a primitive has a Column twin, the same samples
+  * also check that the twin computes the same value.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSpec {
 
   private def forSamples[A](gen: Gen[A], n: Int = 200)(f: A => Unit): Unit = {
     var produced = 0
@@ -24,20 +26,34 @@ class PropertySpec extends AnyFunSuite {
 
   private val texts = Gen.listOf(Gen.alphaNumChar).map(_.mkString)
 
+  /** `twin(lit(s))` for every sample, evaluated by Spark in one select. */
+  private def evalTwin(samples: Seq[String])(twin: Column => Column): Seq[Long] = {
+    val row = spark.range(1).select(samples.map(s => twin(lit(s))): _*).head()
+    samples.indices.map(row.getLong)
+  }
+
   test("pointId: stable, positive, 60-bit") {
+    val samples = Seq.newBuilder[String]
     forSamples(texts) { s =>
       val a = Ids.pointId(s)
       assert(a == Ids.pointId(s))
       assert(a >= 0L && a < (1L << 60))
+      samples += s
     }
+    val ss = samples.result()
+    assert(evalTwin(ss)(Ids.pointIdCol) == ss.map(Ids.pointId))
   }
 
   test("hash31: stable and within [0, 2^31-1)") {
+    val samples = Seq.newBuilder[String]
     forSamples(texts) { s =>
       val h = Ids.hash31(s)
       assert(h == Ids.hash31(s))
       assert(h >= 0L && h < 2147483647L)
+      samples += s
     }
+    val ss = samples.result()
+    assert(evalTwin(ss)(c => Ids.md5Top60Col(c) % 2147483647L) == ss.map(Ids.hash31))
   }
 
   test("sha256/md5 hex: 64/32 lowercase hex chars for any input") {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.core.GraftConfig
 import graft.streaming.WatchPipeline.FileEvent
 
 class StreamingSpec extends SparkSpec {
@@ -60,7 +61,7 @@ class StreamingSpec extends SparkSpec {
 
   test("processBatch filters events to the config scan surface; deletes always pass") {
     val store4 = Files.createTempDirectory("graft_stream_store4").toString
-    val cfg = graft.core.GraftConfig(excludes = Seq("vendor/"), maxFileSize = 64L)
+    val cfg = GraftConfig(excludes = Seq("vendor/"), maxFileSize = 64L)
     val b1 = Seq(
       FileEvent("app.py", "created", 1L, "def app():\n    return 1\n"),
       FileEvent("keep.py", "created", 1L, "def keep():\n    return 2\n"),
@@ -89,7 +90,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[FileEvent]
-    val q = WatchPipeline.start(mem.toDS(), store2, checkpointDir = ckpt, debounceMs = 100L)
+    val q = WatchPipeline.start(mem.toDS(), store2, checkpointDir = ckpt,
+      config = GraftConfig(debounceSeconds = 0.1))
     try {
       mem.addData(FileEvent("s.py", "created", 1L, "def stream_fn():\n    return 42\n"))
       q.processAllAvailable()
@@ -109,7 +111,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[FileEvent]
     val q = WatchPipeline.initialIndexThenWatch(spark, repo.toString, mem.toDS(), store3,
-      checkpointDir = ckpt, debounceMs = 100L)
+      checkpointDir = ckpt, config = GraftConfig(debounceSeconds = 0.1))
     try {
       // initial index ran before any event
       val names0 = spark.read.parquet(s"$store3/chunks")
