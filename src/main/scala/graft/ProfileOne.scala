@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Optimization-round profiler: times individual queries with the Bench
   * methodology (noop sink, min-of-N after an untimed warmup), reports the
   * Spark jobs each query submitted, and dumps `explain("formatted")` into
-  * a plan ledger directory (plans/r12/...). Ends with one JSON line: the
+  * a plan ledger directory (e.g. plans/<round>/). Ends with one JSON line: the
   * min per query plus the effective parallelism, so a core-count scaling
   * probe (`SPARK_GRAFT_CPUS=8` vs `32` on a large input) is checkable from
   * that line alone. Harness-only code — never on a query path.

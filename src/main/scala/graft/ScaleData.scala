@@ -80,14 +80,14 @@ object ScaleData {
       // data is a subset.
       "embeddings" -> {
         val emb = spark.read.parquet(s"$src/embeddings.parquet")
+        // vectors first: in one select with the re-keyed `vec_id` alias, the
+        // lambda's `vec_id` would bind to that alias, not the source id
         emb.crossJoin(spark.range(EmbReplicas).select(col("id").as("_rep")))
-          .select(
-            (col("vec_id") + col("_rep") * KeyStride).as("vec_id"),
-            when(col("_rep") === 0, col("embedding")).otherwise(expr(
-              "transform(sequence(0, size(embedding) - 1), i -> " +
-                "cast(cast(conv(substring(md5(concat(vec_id, '_', _rep, '_', i)), 1, 15), 16, 10) as double)" +
-                " / 576460752303423487.5 - 1.0 as float))")).as("embedding"),
-            col("label"))
+          .withColumn("embedding", when(col("_rep") === 0, col("embedding")).otherwise(
+            transform(sequence(lit(0), size(col("embedding")) - 1), i =>
+              (graft.core.Ids.md5Top60Col(concat(col("vec_id"), lit("_"), col("_rep"), lit("_"), i))
+                .cast("double") / 576460752303423487.5 - 1.0).cast("float"))))
+          .select((col("vec_id") + col("_rep") * KeyStride).as("vec_id"), col("embedding"), col("label"))
       }
     )
     plans.foreach { case (t, df) =>

@@ -21,8 +21,27 @@ import org.apache.spark.sql.DataFrame
   * the same aggregations the fold consumes, so the cost is one
   * scan+combine, small next to the fold itself.
   *
-  * Per-operator bounds are documented in PLANS.md §"Bounded-grid
-  * contract".
+  * == Bounded-grid contract ==
+  * Each operator counts its grid with [[check]] before the fold;
+  * `Contingency.fisherExact` guards IN-PLAN instead (`raise_error` on the
+  * support width — its `tot` is one row, so no extra pass). Bounds:
+  *
+  *  - `KSample.ksTwoSample` / `cramerVonMises` / `varghaDelaney` /
+  *    `ansariBradley` / `kruskalWallis`: distinct values of the value
+  *    column, [[MaxGrid]] (65 536);
+  *  - `KSample.anovaF` / `brownForsythe`: distinct groups, [[MaxGrid]];
+  *  - `KSample.hodgesLehmann`: distinct values PER SIDE, [[MaxPairSide]]
+  *    (4 096 / side — the cross join is capped at ≤ 4096² ≈ 16.8 M
+  *    transient pair rows, regrouped to the difference grid immediately);
+  *  - `Contingency.fisherExact`: hypergeometric support width
+  *    `hi − lo + 1` (≈ the smaller margin; beyond it chiSquare is the
+  *    right test anyway), [[MaxGrid]];
+  *  - `RobustLocation.panel` / `Inequality.panel`: the (group, value)
+  *    grid, [[MaxGrid]].
+  *
+  * `KSample.moodMedian` delegates to `Contingency.chiSquare`, whose
+  * densify cross join is r×c over the two category grids — bounded by
+  * construction for the k×2 median table.
   */
 object GridGuard {
 

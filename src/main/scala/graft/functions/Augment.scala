@@ -59,8 +59,8 @@ object Augment {
                    outOf: Int): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
         Bm25.tokens(col(textCol)).as("t"))
-      .withColumn("kept", expr(
-        s"""filter(t, (x, i) -> cast(conv(substring(md5(concat(cast(doc_id AS string), ':', cast(i + 1 AS string), ':', x)), 1, 15), 16, 10) AS bigint) % $outOf != 0)"""))
+      .withColumn("kept", filter(col("t"), (x, i) => graft.core.Ids.md5Top60Col(concat(
+        col("doc_id").cast("string"), lit(":"), (i + 1).cast("string"), lit(":"), x)) % outOf =!= 0))
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_toks"),
         size(col("kept")).cast("long").as("n_kept"),

@@ -136,9 +136,8 @@ object TextOps {
     */
   val FpMod = 1000000007L
   def fingerprint(textColName: String): Column =
-    expr(
-      s"""aggregate(
-         |  transform(filter(split(lower($textColName), '[^a-z0-9]+'), t -> length(t) > 0),
-         |            s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % 2147483647),
-         |  cast(0 as bigint), (acc, h) -> (acc * 31 + h) % $FpMod)""".stripMargin)
+    aggregate(
+      transform(filter(split(lower(col(textColName)), "[^a-z0-9]+"), t => length(t) > 0),
+        s => graft.core.Ids.md5Top60Col(s) % 2147483647),
+      lit(0L), (acc, h) => (acc * 31 + h) % FpMod)
 }

@@ -148,10 +148,6 @@ object IndexPipeline {
         col("size").as("prevSize"), col("mtime").as("prevMtime"))
     val joined = curMeta.join(prev, Seq("relPath"), "full_outer")
     val removed = joined.filter(col("size").isNull).select(col("relPath"))
-    val unchangedState = joined
-      .filter(col("size").isNotNull && col("prevHash").isNotNull &&
-        col("size") === col("prevSize") && col("mtime") === col("prevMtime"))
-      .select(col("relPath"), col("prevHash").as("hash"), col("size"), col("mtime"))
     val candidates = joined
       .filter(col("size").isNotNull &&
         (col("prevHash").isNull || col("size") =!= col("prevSize") || col("mtime") =!= col("prevMtime")))
@@ -161,8 +157,9 @@ object IndexPipeline {
     // content read + hash, executor-side, candidates only; cached so the
     // parse pass and the state write share one read. A file that vanishes
     // or turns unreadable between the driver walk and this read is SKIPPED
-    // (not a job abort): it gets no state row, so the next run re-examines
-    // it — deleted files then cascade through the removed path.
+    // (not a job abort): it keeps its stored state row, whose size/mtime
+    // no longer match, so the next run re-examines it — deleted files then
+    // cascade through the removed path.
     val rootPath = projectDir
     val hashed = candidates.mapPartitions { it =>
       it.flatMap { c =>
@@ -187,11 +184,8 @@ object IndexPipeline {
     // filesParsed comes out of applyChanges' single parse-metadata
     // aggregate (one job materializes content read + hash + parse AND
     // the entity/error counts — was a separate count() barrier here)
-    val res = applyChanges(spark, storeDir, results, replaced, incremental, embedder)
-
-    val newState = unchangedState.unionByName(
-      hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime)).toDF())
-    timed("state_write")(IndexStore.writeState(newState, storeDir))
+    val fresh = hashed.map(h => FileState(h.row.relPath, h.hash, h.row.size, h.row.mtime))
+    val res = applyChanges(spark, storeDir, results, replaced, fresh, incremental, embedder)
     hashed.unpersist(); results.unpersist()
     res.copy(mode = if (incremental) "incremental" else "full",
       filesScanned = filesScanned)
@@ -205,6 +199,10 @@ object IndexPipeline {
     *
     * `replaced` is a single-column (`relPath`) DataFrame of re-parsed +
     * deleted paths — a join input, never a driver-side literal list.
+    * `fresh` holds the file_state rows of every file read for this merge.
+    * After the chunk write, file_state becomes the stored rows (only when
+    * `incremental`), minus every replaced or fresh path, plus `fresh` — the
+    * one state update, for the batch indexer and the watch path alike.
     *
     * Replacement is ENTITY-level, not file-level (reference:
     * processing/processors.py:53-196): a changed file's old chunks are
@@ -215,6 +213,7 @@ object IndexPipeline {
     */
   def applyChanges(spark: SparkSession, storeDir: String,
                    results: Dataset[ParserResult], replaced: DataFrame,
+                   fresh: Dataset[FileState],
                    incremental: Boolean, embedder: Embedder): IndexingResult = {
     import spark.implicits._
 
@@ -330,6 +329,11 @@ object IndexPipeline {
     val chunksCarried = statRow.getLong(2) - chunksWritten
 
     timed("store_write")(IndexStore.writeChunks(all, storeDir))
+    val stored = (if (incremental) IndexStore.readState(spark, storeDir) else None)
+      .getOrElse(spark.emptyDataset[FileState].toDF())
+    val stale = replaced.unionByName(fresh.select(col("relPath")))
+    timed("state_write")(IndexStore.writeState(
+      stored.join(stale, Seq("relPath"), "left_anti").unionByName(fresh.toDF()), storeDir))
     newChunksRaw.unpersist(); names.unpersist(); all.unpersist(); finalNew.unpersist()
     IndexingResult(if (incremental) "incremental" else "full",
       0, filesParsed, nEntities, nRelations, chunksWritten, chunksCarried, errors, chunksEmbedded)

@@ -1,8 +1,10 @@
 package graft.ingest
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+import scala.util.matching.Regex
+import org.apache.spark.sql.Dataset
+import graft.core.GraftConfig
 import graft.core.Model._
 
 /** Project file scan (reference: indexer.py:820-878; patterns
@@ -17,86 +19,73 @@ import graft.core.Model._
   */
 object SourceScan {
 
-  val DefaultExcludes: Seq[String] = graft.core.GraftConfig.DefaultExcludes
-
-  val DefaultMaxFileSize: Long = 1024 * 1024 // 1 MiB (config/models.py:96)
-
   /** Glob → anchored regex with every literal span regex-quoted, so
     * patterns containing regex metacharacters (`+ ( [ ? |` …) match
     * literally instead of throwing or silently matching the wrong files
     * (e.g. `*.c++`).
     */
-  private[ingest] def globRegex(pat: String): scala.util.matching.Regex =
+  private[ingest] def globRegex(pat: String): Regex =
     ("(?s)^" + pat.split("\\*", -1).map(java.util.regex.Pattern.quote)
       .mkString(".*") + "$").r
 
-  /** Include-pattern check (config/models.py:40-60): `*` admits any
-    * parseable file; otherwise the rel path or basename must match one of
-    * the globs.
+  /** The scan surface — which project files are in scope — compiled ONCE
+    * from a config (a 100k-file walk with 5 globs would otherwise pay ~1M
+    * Pattern.compile calls). The batch walk, the watch snapshot (which
+    * lists through [[listFiles]]) and the watch event filter all ask this
+    * one predicate, so index and watch see the same files (reference
+    * watcher/handler.py:102-147 filters events through the indexer's own
+    * excludes). Serializable: the event filter runs executor-side.
     */
-  def included(relPath: String, includes: Seq[String]): Boolean =
-    includes.contains("*") || includes.exists { pat =>
-      val rx = globRegex(pat)
-      rx.findFirstIn(relPath).isDefined || rx.findFirstIn(relPath.split('/').last).isDefined
-    }
+  final class Surface(config: GraftConfig) extends Serializable {
+    private val (dirPats, filePats) = config.excludes.partition(_.endsWith("/"))
+    private val excludedDirs = dirPats.map(_.stripSuffix("/")).toSet
+    private val exGlobs = filePats.filter(_.contains("*")).map(globRegex)
+    private val exNames = filePats.filterNot(_.contains("*")).toSet
+    // `*` admits any parseable file (config/models.py:40-60)
+    private val incGlobs = if (config.includes.contains("*")) Nil else config.includes.map(globRegex)
 
-  def excluded(relPath: String, excludes: Seq[String]): Boolean =
-    excludes.exists { pat =>
-      if (pat.endsWith("/")) {
-        val d = pat.stripSuffix("/")
-        relPath.split('/').dropRight(1).contains(d)
-      } else if (pat.contains("*")) {
-        val rx = globRegex(pat)
-        rx.findFirstIn(relPath).isDefined || rx.findFirstIn(relPath.split('/').last).isDefined
-      } else {
-        relPath.split('/').contains(pat) || relPath.split('/').last == pat
-      }
-    }
+    /** An excluded directory name: the walk never descends into it. */
+    def prunes(dirName: String): Boolean = excludedDirs.contains(dirName)
 
-  /** List parseable files under `root` (driver-side metadata walk).
-    * Uses walkFileTree so (a) the stream is properly closed and (b)
-    * excluded DIRECTORIES are pruned with SKIP_SUBTREE — a node_modules or
-    * .git tree is never descended into at all.
+    /** `relPath` is in scope at `size` bytes: outside excluded dirs, no
+      * exclude glob or name on it, an include glob on its path or basename,
+      * a registered parser, and under the size cap.
+      */
+    def admits(relPath: String, size: Long): Boolean = {
+      val parts = relPath.split('/')
+      def matches(rx: Regex) = rx.matches(relPath) || rx.matches(parts.last)
+      !parts.init.exists(excludedDirs.contains) && !parts.exists(exNames.contains) &&
+        !exGlobs.exists(matches) && (incGlobs.isEmpty || incGlobs.exists(matches)) &&
+        ParserRegistry.canParse(relPath) && size <= config.maxFileSize
+    }
+  }
+
+  /** In-surface files under `root` as sorted (relPath, size, mtime) — the
+    * one driver-side metadata walk. It closes its directory streams and
+    * prunes excluded DIRECTORIES with SKIP_SUBTREE, so a node_modules or
+    * .git tree is never descended into. An entry that vanishes mid-walk is
+    * skipped; a missing root throws (an empty listing would read as every
+    * file deleted).
     */
-  def listFiles(root: String, excludes: Seq[String] = DefaultExcludes,
-                maxSize: Long = DefaultMaxFileSize,
-                includes: Seq[String] = Seq("*")): Seq[(String, Long, Long)] = {
-    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
+  def listFiles(root: String, config: GraftConfig): Seq[(String, Long, Long)] = {
+    val surface = new Surface(config)
     val rootPath = Paths.get(root)
-    val excludedDirs = excludes.filter(_.endsWith("/")).map(_.stripSuffix("/")).toSet
-    // patterns compile ONCE, not once per visited file: a 100k-file walk
-    // with 5 globs would otherwise pay ~1M Pattern.compile calls
-    val nonDirPats = excludes.filterNot(_.endsWith("/"))
-    val exGlobs = nonDirPats.filter(_.contains("*")).map(globRegex)
-    val exNames = nonDirPats.filterNot(_.contains("*")).toSet
-    val incGlobs = if (includes.contains("*")) Nil else includes.map(globRegex)
     val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     Files.walkFileTree(rootPath, new SimpleFileVisitor[Path] {
       override def preVisitDirectory(dir: Path, attrs: BasicFileAttributes): FileVisitResult =
-        if (dir != rootPath && excludedDirs.contains(dir.getFileName.toString))
-          FileVisitResult.SKIP_SUBTREE
+        if (dir != rootPath && surface.prunes(dir.getFileName.toString)) FileVisitResult.SKIP_SUBTREE
         else FileVisitResult.CONTINUE
       override def visitFile(p: Path, attrs: BasicFileAttributes): FileVisitResult = {
-        if (attrs.isRegularFile) {
-          val rel = rootPath.relativize(p).toString.replace('\\', '/')
-          val base = rel.split('/').last
-          val ex = exGlobs.exists(rx => rx.findFirstIn(rel).isDefined || rx.findFirstIn(base).isDefined) ||
-            rel.split('/').exists(exNames.contains)
-          val inc = incGlobs.isEmpty ||
-            incGlobs.exists(rx => rx.findFirstIn(rel).isDefined || rx.findFirstIn(base).isDefined)
-          if (!ex && inc && ParserRegistry.canParse(rel) && attrs.size <= maxSize)
-            out += ((rel, attrs.size, attrs.lastModifiedTime.toMillis))
-        }
+        val rel = rootPath.relativize(p).toString.replace('\\', '/')
+        if (attrs.isRegularFile && surface.admits(rel, attrs.size))
+          out += ((rel, attrs.size, attrs.lastModifiedTime.toMillis))
         FileVisitResult.CONTINUE
       }
+      override def visitFileFailed(p: Path, e: java.io.IOException): FileVisitResult =
+        if (p == rootPath) throw e else FileVisitResult.CONTINUE
     })
     out.toSeq.sortBy(_._1)
   }
-
-  /** Config-driven variant of [[listFiles]]. */
-  def listFiles(root: String, config: graft.core.GraftConfig): Seq[(String, Long, Long)] =
-    listFiles(root, config.excludes, config.maxFileSize, config.includes)
 
   /** Parse a scanned Dataset into per-file ParserResults. */
   def parseAll(files: Dataset[FileRow]): Dataset[ParserResult] = {

@@ -572,9 +572,7 @@ object AnalyticsQueries {
         .select(col("shard").cast("long").as("shard"),
           explode(col("tokens")).as("token"))
       val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("n"))
-        .withColumn("shard",
-          expr("cast(conv(substring(md5(token), 1, 15), 16, 10) as bigint)" +
-            s" % 2147483647 % $shards"))
+        .withColumn("shard", graft.core.Ids.md5Top60Col(col("token")) % 2147483647 % shards)
       val shardTot = exact.groupBy(col("shard")).agg(sum(col("n")).as("n_shard"))
       exact.join(shardTot, Seq("shard"))
         .filter(col("n") * (k + 1) > col("n_shard"))

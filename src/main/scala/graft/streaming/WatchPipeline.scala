@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.GraftConfig
 import graft.core.Model.{FileState, ParserResult}
 import graft.index.{DeterministicEmbedder, Embedder, IndexPipeline, IndexStore}
-import graft.ingest.ParserRegistry
+import graft.ingest.{ParserRegistry, SourceScan}
 
 /** Streaming watch pipeline (reference lifecycle SURVEY.md §3.3 — watchdog
   * → debounce/coalesce → incremental index, watcher/handler.py +
@@ -40,18 +41,17 @@ object WatchPipeline {
     events.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** True iff the batch scan would have listed this event's file
-    * (SourceScan's include/exclude/size/parser rules) — the watcher-side
-    * event filter (reference: watcher/handler.py:102-147
-    * `_should_process_file`). Deletes are always in scope: a file that
-    * LEFT the surface (e.g. config change) must still cascade out.
+  /** True iff the batch scan would have listed this event's file — the
+    * watcher-side event filter (reference: watcher/handler.py:102-147
+    * `_should_process_file`), asking the scan's own [[SourceScan.Surface]]
+    * with the content's UTF-8 byte length as the size. Deletes are always
+    * in scope: a file that LEFT the surface (e.g. config change) must
+    * still cascade out.
     */
-  private[streaming] def inScanSurface(e: FileEvent, config: GraftConfig): Boolean =
-    e.eventType == "deleted" || (
-      graft.ingest.SourceScan.included(e.relPath, config.includes) &&
-      !graft.ingest.SourceScan.excluded(e.relPath, config.excludes) &&
-      ParserRegistry.canParse(e.relPath) &&
-      e.content.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= config.maxFileSize)
+  private def inScanSurface(e: FileEvent, surface: SourceScan.Surface): Boolean =
+    e.eventType == "deleted" || surface.admits(e.relPath, utf8Length(e.content))
+
+  private def utf8Length(s: String): Long = s.getBytes(StandardCharsets.UTF_8).length.toLong
 
   /** Apply one micro-batch of events to the store — the exact batch-merge
     * code path (IndexPipeline.applyChanges), scoped to the touched files.
@@ -63,27 +63,22 @@ object WatchPipeline {
                    embedder: Embedder = DeterministicEmbedder(),
                    config: GraftConfig = GraftConfig()): IndexPipeline.IndexingResult = {
     import spark.implicits._
+    val surface = new SourceScan.Surface(config)
     val latest = coalesce(batch.toDF()).as[FileEvent]
-      .filter(e => inScanSurface(e, config)).cache()
+      .filter(e => inScanSurface(e, surface)).cache()
     val upserts = latest.filter(e => e.eventType == "created" || e.eventType == "modified")
     val parsed: Dataset[ParserResult] = upserts.map(e => ParserRegistry.parse(e.relPath, e.content))
     // every coalesced event path (upsert or delete) is replaced — as a join
     // input, not a driver-side Set, same as the batch diff path
     val replaced = latest.map(_.relPath).toDF("relPath")
-    val incremental = IndexStore.exists(storeDir)
-    val res = IndexPipeline.applyChanges(spark, storeDir, parsed, replaced, incremental, embedder)
-
-    // maintain file_state so a later batch index stays incremental. Size
-    // must be the UTF-8 BYTE length (what the batch walk's attrs.size
-    // reports), not the string's char count — a mismatch would turn every
-    // watch-touched file into a prefilter candidate on the next batch run.
-    // ts carries the file's mtime (FileWatchSource emits e.mtime as ts).
-    val newStates = upserts.map(e => FileState(e.relPath, graft.core.Ids.sha256Hex(e.content),
-      e.content.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong, e.ts))
-    val prev = IndexStore.readState(spark, storeDir)
-      .getOrElse(spark.emptyDataset[FileState].toDF())
-    val state = prev.join(replaced, Seq("relPath"), "left_anti").unionByName(newStates.toDF())
-    IndexStore.writeState(state, storeDir)
+    // state rows as the batch walk would record them: size is the UTF-8
+    // BYTE length (attrs.size), not the char count, and ts carries the
+    // file's mtime (FileWatchSource emits e.mtime as ts) — a mismatch would
+    // make every watch-touched file a prefilter candidate on the next index
+    val fresh = upserts.map(e =>
+      FileState(e.relPath, graft.core.Ids.sha256Hex(e.content), utf8Length(e.content), e.ts))
+    val res = IndexPipeline.applyChanges(spark, storeDir, parsed, replaced, fresh,
+      IndexStore.exists(storeDir), embedder)
     latest.unpersist()
     res
   }

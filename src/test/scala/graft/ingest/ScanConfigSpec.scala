@@ -7,10 +7,12 @@ import graft.core.GraftConfig
 class ScanConfigSpec extends AnyFunSuite {
 
   test("included: wildcard admits all; globs match path or basename") {
-    assert(SourceScan.included("a/b/c.py", Seq("*")))
-    assert(SourceScan.included("a/b/c.py", Seq("*.py")))
-    assert(!SourceScan.included("a/b/c.js", Seq("*.py")))
-    assert(SourceScan.included("src/x.md", Seq("*.py", "*.md")))
+    def included(relPath: String, includes: Seq[String]) =
+      new SourceScan.Surface(GraftConfig(includes = includes)).admits(relPath, 0L)
+    assert(included("a/b/c.py", Seq("*")))
+    assert(included("a/b/c.py", Seq("*.py")))
+    assert(!included("a/b/c.js", Seq("*.py")))
+    assert(included("src/x.md", Seq("*.py", "*.md")))
   }
 
   test("GraftConfig drives the file walk: includes, excludes, size cap") {
